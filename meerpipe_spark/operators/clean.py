@@ -8,8 +8,9 @@
 - ``bandwagon``: if the already-zapped fraction of a channel (or subint)
   exceeds a threshold, zap the remainder of it.
 
-Spark-first: all three are relational — predicates, two-level hash
-aggregations with exact medians, and broadcast joins back onto the cube.
+The three operators below are the relational reference forms
+(predicates, exact medians, broadcast joins back onto the cube);
+:func:`clean_chain` runs the chain as one cell-statistics pass.
 Zapping NEVER deletes rows: it zeroes ``weight`` (the reference's
 convention, docs/pipeline_workflow.md:31-33) so downstream weighted
 aggregations (scrunch A1) see consistent denominators.
@@ -22,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-MAD_TO_SIGMA = 1.4826  # consistent estimator for Gaussian sigma
+from meerpipe_spark.operators.cells import MAD_TO_SIGMA, apply_verdicts, observation_stats
 
 
 def rcvrstd(
@@ -130,98 +131,15 @@ def clean_chain(
     sigma_threshold: float = 5.0,
     bandwagon_frac: float = 0.5,
 ) -> DataFrame:
-    """rcvrstd → surgical → bandwagon, the reference's fixed order —
-    FUSED into one cell-granularity statistics pass.
-
-    Every zap decision in the chain is constant within an
-    (obs, subint, chan) cell: rcvrstd's lists and freq trim are
-    chan/subint predicates, surgical zaps whole cells, and bandwagon's
-    fractions are rollups of per-cell zap counts. So instead of the
-    naive composition — which re-aggregates the fact-size cube once
-    per cleaner and replays the surgical subtree under each bandwagon
-    branch (the 57-shuffle plan VERDICT r5 #7 measured) — the chain is:
-
-    1. ONE (obs, subint, chan) hash aggregation over the cube carrying
-       every sufficient statistic at once: off-pulse cell RMS (surgical
-       reads pre-clean values, so rcvrstd ordering is preserved),
-       row count, and pre-existing zero-weight count;
-    2. tiny rollups of that cell table (persisted tracked — it is
-       nchan × nsub × nobs, dimension-sized at any SF): per-obs exact
-       median + MAD → surgical decisions; per-(obs,chan) and
-       per-(obs,subint) zap fractions — where a cell zapped by rcvrstd
-       or surgical contributes ALL its rows, exactly as the row-level
-       avg over the zeroed weights would count them;
-    3. one broadcast join of the final cell-level verdict back onto the
-       cube — the only other fact-table-wide operation.
-
-    Equivalence with the composed rcvrstd→surgical→bandwagon chain is
-    pinned by tests/test_pipeline.py::test_clean_chain_fused_equivalence.
-    At 100 TB: one wide exchange instead of six, and the broadcast table
-    is bounded by cells, not rows.
+    """rcvrstd → surgical → bandwagon, the reference's fixed order, in one
+    cell-statistics pass: every zap decision is constant within an
+    (obs, subint, chan) cell, so the chain is
+    :func:`~meerpipe_spark.operators.cells.observation_stats` (one
+    aggregation, one pandas kernel per obs) and one broadcast join of the
+    verdicts. Rows already at weight 0 count toward bandwagon's fractions
+    and a zapped cell counts all its rows, as in the composed chain above
+    (tests/test_pipeline.py pins the equivalence). The pipeline runs this
+    same pass, so there is one cleaning implementation.
     """
-    from meerpipe_spark.cacheutil import persist_tracked
-
-    rcv_zap = F.col("chan").isin(*bad_channels) if bad_channels else F.lit(False)
-
-    cell = persist_tracked(
-        cube.groupBy("obs_id", "subint", "chan").agg(
-            F.stddev_samp(F.when(~on_pulse, F.col("value"))).alias("cell_rms"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("weight") == 0, F.lit(1)).otherwise(F.lit(0))).alias(
-                "n_w0"
-            ),
-        )
-    )
-    obs_med = cell.groupBy("obs_id").agg(F.median("cell_rms").alias("rms_med"))
-    obs_mad = (
-        cell.join(obs_med, ["obs_id"])
-        .groupBy("obs_id")
-        .agg(F.median(F.abs(F.col("cell_rms") - F.col("rms_med"))).alias("rms_mad"))
-    )
-    stats = obs_med.join(obs_mad, ["obs_id"])
-    dec = (
-        cell.join(F.broadcast(stats), ["obs_id"])
-        .withColumn(
-            "zap_cell",
-            F.coalesce(
-                (F.abs(F.col("cell_rms") - F.col("rms_med"))
-                 > sigma_threshold * MAD_TO_SIGMA * F.col("rms_mad"))
-                & (F.col("rms_mad") > 0),
-                F.lit(False),
-            ),
-        )
-        .withColumn("cell_zapped", rcv_zap | F.col("zap_cell"))
-        # rows already at weight 0 count toward bandwagon's fraction;
-        # a zapped cell contributes all of its rows
-        .withColumn(
-            "n_zap",
-            F.when(F.col("cell_zapped"), F.col("n_rows")).otherwise(F.col("n_w0")),
-        )
-    )
-    by_chan = dec.groupBy("obs_id", "chan").agg(
-        (F.sum("n_zap") / F.sum("n_rows")).alias("chan_zap_frac")
-    )
-    by_subint = dec.groupBy("obs_id", "subint").agg(
-        (F.sum("n_zap") / F.sum("n_rows")).alias("subint_zap_frac")
-    )
-    verdicts = (
-        dec.join(F.broadcast(by_chan), ["obs_id", "chan"])
-        .join(F.broadcast(by_subint), ["obs_id", "subint"])
-        .select(
-            "obs_id",
-            "subint",
-            "chan",
-            (
-                F.col("cell_zapped")
-                | (F.col("chan_zap_frac") >= bandwagon_frac)
-                | (F.col("subint_zap_frac") >= bandwagon_frac)
-            ).alias("zap_final"),
-        )
-    )
-    return (
-        cube.join(F.broadcast(verdicts), ["obs_id", "subint", "chan"])
-        .withColumn(
-            "weight", F.when(F.col("zap_final"), 0.0).otherwise(F.col("weight"))
-        )
-        .select(*cube.columns)  # join reordered the key columns to the front
-    )
+    stats = observation_stats(cube, on_pulse, bad_channels, sigma_threshold, bandwagon_frac)
+    return apply_verdicts(cube, stats)[0]

@@ -1,35 +1,38 @@
 """End-to-end per-observation pipeline (SURVEY.md §3): the reference's
-nf-core stage chain re-expressed as ONE composable DataFrame DAG.
+nf-core stage chain as one DataFrame DAG.
 
-    ingest(cube) → delay-fix (J6+A12) → chop (F2) → clean (rcvrstd/
-    surgical/bandwagon) → decimation products (A1 × config DSL) →
-    flux calibration (A5/A6/A10/A11) → S/N series (A7/A8) →
-    results doc (D11)
+    ingest(cube) → chop (F2) → cell statistics + per-obs kernel (clean,
+    flux multiplier A5/A6/A10/A11, S/N A7/A8, flux) → verdict join →
+    decimation products (A1 × config DSL), dynspec → results doc (D11)
 
-Everything is lazy: calling ``run_observation_pipeline`` builds the
-logical plan; Catalyst fuses the stages (filters push into the scan, the
-cleaners' aggregations share the (obs, subint, chan) shuffle key) and
-nothing executes until a product is written/collected. The reference runs
-these stages as separate Slurm processes with file handoffs; here each
-stage is a view over the previous one and the cleaned cube is cached
-once, feeding every decimation product.
+Observations are tiny, so plan building and per-stage overhead cost
+more than the data work. The chopped cube is the only fact-sized input
+and the only cache; one (obs, subint, chan) aggregation of it feeds one
+pandas kernel per obs (operators/cells.py) that decides every cell and
+emits every per-obs number. Products and dynspec read the cube joined
+once to the broadcast per-cell (zap, mult) table; the results document
+is the kernel's per-obs row plus at most one join.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
+from meerpipe_spark.cacheutil import persist_tracked
+from meerpipe_spark.operators.cells import apply_verdicts, observation_stats
 from meerpipe_spark.operators.chop import chop_edge_channels
-from meerpipe_spark.operators.clean import clean_chain
 from meerpipe_spark.operators.dynspec import derive_dynspec
-from meerpipe_spark.operators.fluxcal import (
-    apply_flux,
-    flux_density,
-    flux_multiplier,
-    offpulse_rms_per_channel,
-)
-from meerpipe_spark.operators.snr import cumulative_snr, profile_snr
+from meerpipe_spark.operators.snr import cumulative_snr
+from meerpipe_spark.operators.wlsfit import fit_dm, fit_rm
 from meerpipe_spark.plans.decimation import DecimationSpec, emit_products
+
+DM_FIELDS = ("dm", "dm_err", "dm_epoch", "dm_chi2r", "dm_tres")
+RM_FIELDS = ("rm", "rm_err")
+#: results.json: the reference's 10 fields (generate_images_results.py:
+#: 272-298) plus the legacy mult/observed_rms
+DOC_FIELDS = ("percent_rfi_zapped", *DM_FIELDS, *RM_FIELDS, "sn", "flux", "mult", "observed_rms")
 
 
 def run_observation_pipeline(
@@ -45,104 +48,71 @@ def run_observation_pipeline(
     toas: DataFrame | None = None,
     qu_chans: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Returns {product_name: DataFrame} plus the bookkeeping frames
-    ('cleaned', 'multipliers', 'snr_series', 'results').
-
-    The cleaned cube is cached once (``persist=True``) because every
-    decimation product, the flux calibration, and the S/N series all
-    re-read it — Spark does NOT reuse exchanges across DataFrame
-    branches, so without the cache each consumer replays the whole
-    cleaning chain's shuffles (VERDICT r5 #7: 57 shuffles for the
-    composed doc). Caches go through cacheutil.persist_tracked so batch
-    harnesses (driver gate, bench, sweep) release them between queries;
-    interactive callers use :func:`release_pipeline` after the products
-    are written. The tiny per-obs multiplier table is persisted too:
-    five downstream branches broadcast it, and each broadcast build
-    would otherwise re-aggregate the cleaned cube.
+    """Returns {product_name: DataFrame} plus 'chopped' (the input every
+    output reads), 'cleaned', 'multipliers', 'snr_series', 'dynspec'
+    and 'results'. ``persist=True`` caches the chopped cube, the run's
+    only cache (through cacheutil.persist_tracked, so batch harnesses
+    release it between queries; interactive callers use
+    :func:`release_pipeline`): Spark does not reuse work across DataFrame
+    branches, so without it every output would rescan the source.
+    ``toas`` (per-channel TOA residuals) and ``qu_chans`` (per-channel
+    Q/U) add the native DM and RM fits to the results document.
     """
     chopped = chop_edge_channels(cube)
-    cleaned = clean_chain(chopped, on_pulse, bad_channels=bad_channels)
     if persist:
-        from meerpipe_spark.cacheutil import persist_tracked
-
-        cleaned = persist_tracked(cleaned)
-
-    # flux multiplier derives from the OFF-pulse RMS (fluxcal_meerkat.py
-    # off-window statistics) — complement the on-pulse template predicate
-    per_chan = offpulse_rms_per_channel(cleaned, ~on_pulse).withColumn(
-        "expected_rms", F.lit(expected_rms)
+        chopped = persist_tracked(chopped)
+    stats = observation_stats(chopped, on_pulse, bad_channels, expected_rms=expected_rms, fluxcal_window=fluxcal_window)
+    cleaned, calibrated = apply_verdicts(chopped, stats)
+    per_obs = stats.filter(F.col("kind") == "obs")
+    fits = _fits(
+        None if toas is None else fit_dm(toas, ["obs_id"], *map(F.col, ("freq_mhz", "resid_s", "err_s", "dm0", "mjd"))),
+        None if qu_chans is None else fit_rm(qu_chans, ["obs_id"], *map(F.col, ("freq_mhz", "q", "u", "pa_err"))),
     )
-    mults = flux_multiplier(per_chan, "expected_rms", *fluxcal_window)
-    if persist:
-        from meerpipe_spark.cacheutil import persist_tracked
-
-        mults = persist_tracked(mults)
-    calibrated = apply_flux(cleaned, mults)
-
-    products = emit_products(calibrated, specs, input_nsub, input_nchan)
-
-    per_subint = (
-        calibrated.filter(F.col("weight") > 0)
-        .groupBy("obs_id", "subint")
-        .agg(
-            F.sum(F.when(on_pulse, F.col("value"))).alias("on_sum"),
-            F.stddev_samp(F.when(~on_pulse, F.col("value"))).alias("off_rms"),
-        )
-    )
-    snr_series = cumulative_snr(per_subint)
-    snr_total = profile_snr(calibrated.filter(F.col("weight") > 0), ["obs_id"], on_pulse)
-
-    # optional native fits feeding the full results document (D11):
-    # per-channel TOA residuals -> DM block, per-channel Q/U -> RM block
-    dm_frame = None
-    if toas is not None:
-        from meerpipe_spark.operators.wlsfit import fit_dm
-
-        dm_frame = fit_dm(
-            toas,
-            ["obs_id"],
-            F.col("freq_mhz"),
-            F.col("resid_s"),
-            F.col("err_s"),
-            F.col("dm0"),
-            F.col("mjd"),
-        )
-    rm_frame = None
-    if qu_chans is not None:
-        from meerpipe_spark.operators.wlsfit import fit_rm
-
-        rm_frame = fit_rm(
-            qu_chans,
-            ["obs_id"],
-            F.col("freq_mhz"),
-            F.col("q"),
-            F.col("u"),
-            F.col("pa_err"),
-        )
-    flux = flux_density(calibrated, on_pulse)
-
-    results = results_doc(
-        cleaned, mults, snr_total, dm_fit=dm_frame, rm_fit=rm_frame, flux=flux
-    )
-    out = dict(products)
+    out = emit_products(calibrated, specs, input_nsub, input_nchan)
     out.update(
+        chopped=chopped,
         cleaned=cleaned,
-        multipliers=mults,
-        snr_series=snr_series,
+        multipliers=per_obs.select("obs_id", "observed_rms", "expected_rms", "mult"),
+        snr_series=cumulative_snr(stats.filter(F.col("kind") == "subint")),
         dynspec=derive_dynspec(calibrated, on_pulse),
-        results=results,
+        results=_document(per_obs if fits is None else per_obs.join(fits, "obs_id", "left")),
     )
     return out
 
 
 def release_pipeline(out: dict[str, DataFrame]) -> None:
-    """Unpersist every cached frame a pipeline run pinned (the cleaned
-    cube and the per-obs multiplier table). Call after the products have
-    been written/collected."""
-    for key in ("cleaned", "multipliers"):
-        df = out.get(key)
-        if df is not None:
-            df.unpersist()
+    """Unpersist the one cache a pipeline run pins, the chopped cube.
+    Call after the products have been written/collected."""
+    out["chopped"].unpersist()
+
+
+def _fits(dm_fit: DataFrame | None, rm_fit: DataFrame | None) -> DataFrame | None:
+    """The DM and RM fit blocks as one per-obs frame (None when neither is
+    given): a union and one aggregation, so the document takes one join
+    for both."""
+    parts = [fit.select("obs_id", *cols) for fit, cols in ((dm_fit, DM_FIELDS), (rm_fit, RM_FIELDS))
+             if fit is not None]
+    if not parts:
+        return None
+    fits = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return fits.groupBy("obs_id").agg(*[F.first(c, ignorenulls=True).alias(c) for c in fits.columns[1:]])
+
+
+def _document(doc: DataFrame) -> DataFrame:
+    """One results.json string per obs. A field ``doc`` lacks is an
+    EXPLICIT JSON null (ignoreNullFields=false), matching the
+    reference's raw-only null-variant document (:342-355): an absent
+    measurement is ``null``, never a missing key."""
+    return doc.select(
+        "obs_id",
+        F.to_json(
+            F.struct(*[
+                F.col(f) if f in doc.columns else F.lit(None).cast("double").alias(f)
+                for f in DOC_FIELDS
+            ]),
+            {"ignoreNullFields": "false"},
+        ).alias("results_json"),
+    )
 
 
 def results_doc(
@@ -153,70 +123,20 @@ def results_doc(
     rm_fit: DataFrame | None = None,
     flux: DataFrame | None = None,
 ) -> DataFrame:
-    """D11 results.json: the reference's FULL 10-field document
-    (generate_images_results.py:272-298) — percent_rfi_zapped, dm,
-    dm_err, dm_epoch, dm_chi2r, dm_tres, rm, rm_err, sn, flux — one row
-    per obs, emitted as a JSON string column ready for the sink.
-
-    ``dm_fit`` is the native per-channel-TOA DM fit
-    (operators/wlsfit.py::fit_dm: dm, dm_err, dm_epoch, dm_chi2r,
-    dm_tres), ``rm_fit`` the native PA-vs-λ² fit (fit_rm: rm, rm_err),
-    ``flux`` the period-averaged flux density. Any of the three may be
-    None — the corresponding fields are emitted as EXPLICIT JSON nulls
-    (ignoreNullFields=false), matching the reference's raw-only
-    null-variant document (:342-355) where every absent measurement is
-    ``null``, never a missing key. The legacy mult/observed_rms fields
-    are kept alongside."""
-    zapfrac = cleaned.groupBy("obs_id").agg(
+    """D11 results.json composed from the separate operators' outputs
+    (the pipeline emits the same document from its per-obs kernel row):
+    percent_rfi_zapped from the cleaned cube, mult/observed_rms from
+    ``mults`` (fluxcal.flux_multiplier), sn from ``snr_total``
+    (snr.profile_snr), the native DM fit ``dm_fit``
+    (wlsfit.fit_dm: dm, dm_err, dm_epoch, dm_chi2r, dm_tres), the native
+    RM fit ``rm_fit`` (wlsfit.fit_rm: rm, rm_err) and the period-averaged
+    ``flux`` (fluxcal.flux_density). Any of the last three may be None:
+    its fields are then explicit JSON nulls."""
+    doc = cleaned.groupBy("obs_id").agg(
         F.avg(F.when(F.col("weight") == 0, 1.0).otherwise(0.0)).alias("percent_rfi_zapped")
     )
-    doc = (
-        zapfrac.join(mults.select("obs_id", "mult", "observed_rms"), "obs_id", "left")
-        .join(snr_total, "obs_id", "left")
-    )
-    if dm_fit is not None:
-        doc = doc.join(
-            dm_fit.select("obs_id", "dm", "dm_err", "dm_epoch", "dm_chi2r", "dm_tres"),
-            "obs_id",
-            "left",
-        )
-    else:
-        doc = doc.select(
-            "*",
-            *[
-                F.lit(None).cast("double").alias(c)
-                for c in ("dm", "dm_err", "dm_epoch", "dm_chi2r", "dm_tres")
-            ],
-        )
-    if rm_fit is not None:
-        doc = doc.join(rm_fit.select("obs_id", "rm", "rm_err"), "obs_id", "left")
-    else:
-        doc = doc.select(
-            "*",
-            F.lit(None).cast("double").alias("rm"),
-            F.lit(None).cast("double").alias("rm_err"),
-        )
-    if flux is not None:
-        doc = doc.join(flux.select("obs_id", "flux"), "obs_id", "left")
-    else:
-        doc = doc.select("*", F.lit(None).cast("double").alias("flux"))
-    return doc.select(
-        "obs_id",
-        F.to_json(
-            F.struct(
-                "percent_rfi_zapped",
-                "dm",
-                "dm_err",
-                "dm_epoch",
-                "dm_chi2r",
-                "dm_tres",
-                "rm",
-                "rm_err",
-                F.col("snr").alias("sn"),
-                "flux",
-                "mult",
-                "observed_rms",
-            ),
-            {"ignoreNullFields": "false"},
-        ).alias("results_json"),
-    )
+    for part in (mults.select("obs_id", "mult", "observed_rms"), snr_total.select("obs_id", F.col("snr").alias("sn")),
+                 _fits(dm_fit, rm_fit), None if flux is None else flux.select("obs_id", "flux")):
+        if part is not None:
+            doc = doc.join(part, "obs_id", "left")
+    return _document(doc)

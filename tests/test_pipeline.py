@@ -302,3 +302,164 @@ def test_results_doc_writes_through_ledger_sink(spark, cube, tmp_path):
         assert field in doc
     manifest = [json.loads(line) for line in open(led + "/_manifest.ndjson")]
     assert sum(e["rows"] for e in manifest[0]["files"]) == 1
+
+
+EQ_NSUB, EQ_NPOL, EQ_NCHAN, EQ_NBIN = 4, 4, 8, 16
+EQ_WINDOW = (900.0, 1250.0)
+
+
+def eq_on_pulse():
+    return F.col("bin").between(6, 9)
+
+
+@pytest.fixture(scope="module")
+def obs_cube(spark):
+    """Three 4-pol observations in one frame. obsA has an RFI channel (5)
+    and pre-zeroed rows, most of them in channel 6 (bandwagon finishes
+    it); in obsB the cell (subint 0, chan 3) keeps a single off-pulse
+    row, so its cell_rms is null; every channel of obsC lies above the
+    fluxcal window, so obsC has no multiplier. Channel 0 of obsA/obsB
+    (880 MHz) is outside the LBAND chop bounds."""
+    rng = np.random.default_rng(7)
+    rows = []
+    for obs, f0 in (("obsA", 880.0), ("obsB", 880.0), ("obsC", 1300.0)):
+        for s in range(EQ_NSUB):
+            for p in range(EQ_NPOL):
+                for c in range(EQ_NCHAN):
+                    for b in range(EQ_NBIN):
+                        on = 6 <= b <= 9
+                        if obs == "obsB" and (s, c) == (0, 3) and not on and (p, b) != (0, 0):
+                            continue
+                        rfi = 30.0 if obs == "obsA" and c == 5 else 1.0
+                        value = (8.0 if on else 0.0) + rng.normal(0, 1.0) * rfi
+                        zeroed = obs == "obsA" and rng.uniform() < (0.6 if c == 6 else 0.05)
+                        rows.append((obs, s, p, c, b, "LBAND", EQ_NCHAN, f0 + 40.0 * c,
+                                     float(value), 0.0 if zeroed else 1.0))
+    return spark.createDataFrame(
+        rows, ["obs_id", "subint", "pol", "chan", "bin", "band", "nchan", "freq", "value", "weight"]
+    )
+
+
+def _by_key(df, keys):
+    return {tuple(r[k] for k in keys): r.asDict() for r in df.collect()}
+
+
+def _assert_close(a: dict, b: dict, fields):
+    import math
+
+    assert a.keys() == b.keys()
+    for key in a:
+        for f in fields:
+            x, y = a[key][f], b[key][f]
+            assert (x is None and y is None) or math.isclose(x, y, rel_tol=1e-12, abs_tol=1e-12), (key, f, x, y)
+
+
+def test_pipeline_matches_composed_operators(spark, obs_cube):
+    """run_observation_pipeline (one cell aggregation + one per-obs
+    kernel) reproduces the composed public operators: equal cleaned
+    weights; doc fields, products, S/N series and dynspec to 1e-12."""
+    import json
+
+    from meerpipe_spark.operators.chop import chop_edge_channels
+    from meerpipe_spark.operators.clean import clean_chain
+    from meerpipe_spark.operators.dynspec import derive_dynspec
+    from meerpipe_spark.operators.fluxcal import (
+        apply_flux, flux_density, flux_multiplier, offpulse_rms_per_channel,
+    )
+    from meerpipe_spark.operators.snr import cumulative_snr, profile_snr
+    from meerpipe_spark.plans.decimation import emit_products
+    from meerpipe_spark.plans.pipeline import release_pipeline, results_doc
+
+    on = eq_on_pulse()
+    specs = parse_decimation_flags("pscrunch, t 2 f 4, tscrunch")
+    out = run_observation_pipeline(
+        obs_cube, on, specs, input_nsub=EQ_NSUB, input_nchan=EQ_NCHAN,
+        expected_rms=1.0, fluxcal_window=EQ_WINDOW, bad_channels=[1],
+    )
+
+    cleaned = clean_chain(chop_edge_channels(obs_cube), on, bad_channels=[1])
+    per_chan = offpulse_rms_per_channel(cleaned, ~on).withColumn("expected_rms", F.lit(1.0))
+    mults = flux_multiplier(per_chan, "expected_rms", *EQ_WINDOW)
+    calibrated = apply_flux(cleaned, mults)
+    live = calibrated.filter(F.col("weight") > 0)
+    per_subint = live.groupBy("obs_id", "subint").agg(
+        F.sum(F.when(on, F.col("value"))).alias("on_sum"),
+        F.stddev_samp(F.when(~on, F.col("value"))).alias("off_rms"),
+    )
+    doc = results_doc(cleaned, mults, profile_snr(live, ["obs_id"], on), flux=flux_density(calibrated, on))
+
+    row_key = ["obs_id", "subint", "pol", "chan", "bin"]
+    weights = _by_key(out["cleaned"], row_key)
+    assert weights == _by_key(cleaned, row_key)
+    assert 0 < sum(r["weight"] == 0 for r in weights.values()) < len(weights)
+    docs = {r.obs_id: json.loads(r.results_json) for r in out["results"].collect()}
+    want = {r.obs_id: json.loads(r.results_json) for r in doc.collect()}
+    assert set(docs) == {"obsA", "obsB", "obsC"}
+    _assert_close(docs, want, list(want["obsA"]))
+    assert docs["obsC"]["mult"] is None and docs["obsA"]["mult"] is not None
+    for name, product in emit_products(calibrated, specs, EQ_NSUB, EQ_NCHAN).items():
+        _assert_close(_by_key(out[name], row_key), _by_key(product, row_key), ["value", "weight", "freq"])
+    _assert_close(_by_key(out["snr_series"], ["obs_id", "subint"]),
+                  _by_key(cumulative_snr(per_subint), ["obs_id", "subint"]), ["single_sum", "cumulative_snr"])
+    dyn_key, dyn_fields = ["obs_id", "subint", "chan"], ["freq_mhz", "flux", "flux_err"]
+    dyn = _by_key(out["dynspec"], dyn_key)
+    _assert_close(dyn, _by_key(derive_dynspec(calibrated, on), dyn_key), dyn_fields)
+    # obsC has no multiplier: its values stay unscaled
+    unscaled = _by_key(derive_dynspec(out["cleaned"].filter(F.col("obs_id") == "obsC"), on), dyn_key)
+    _assert_close({k: v for k, v in dyn.items() if k[0] == "obsC"}, unscaled, dyn_fields)
+    release_pipeline(out)
+
+
+def test_release_pipeline_frees_every_cache(spark, obs_cube):
+    """Every cache a run pins is gone after release_pipeline."""
+    from meerpipe_spark.plans.pipeline import release_pipeline
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    out = run_observation_pipeline(
+        obs_cube, eq_on_pulse(), parse_decimation_flags("pscrunch"), input_nsub=EQ_NSUB,
+        input_nchan=EQ_NCHAN, expected_rms=1.0, fluxcal_window=EQ_WINDOW, bad_channels=[1],
+    )
+    for df in out.values():
+        df.count()
+    assert not cache.isEmpty()
+    release_pipeline(out)
+    assert cache.isEmpty()
+
+
+def _plan_nodes(df) -> dict[str, int]:
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    names = ("Aggregate", "FlatMapGroupsInPandas", "Join", "InMemoryRelation")
+    found = re.findall(r"^[\s:+|-]*(\w+)", plan, flags=re.M)
+    return {n: found.count(n) for n in names}
+
+
+def test_pipeline_plan_shape_ceiling(spark, cube):
+    """One run's plan shape, pinned: the cleaned cube is ONE aggregation
+    of the cached chopped cube (and one pandas kernel) before the single
+    verdict join; results is that aggregation and kernel plus at most
+    one join (the DM/RM fits, when given)."""
+    from meerpipe_spark.plans.pipeline import release_pipeline
+
+    fits = spark.createDataFrame(
+        [("obsA", 900.0 + 40.0 * c, 1e-6 * c, 1e-7, 0.0, 60000.0, 1.0, 0.5, 0.1) for c in range(4)],
+        ["obs_id", "freq_mhz", "resid_s", "err_s", "dm0", "mjd", "q", "u", "pa_err"],
+    )
+    kw = dict(specs=[], input_nsub=NSUB, input_nchan=NCHAN, expected_rms=1.0,
+              fluxcal_window=(900.0, 1500.0))
+    out = run_observation_pipeline(cube, on_pulse(), **kw)
+    with_fits = run_observation_pipeline(cube, on_pulse(), toas=fits, qu_chans=fits, **kw)
+    assert _plan_nodes(out["cleaned"]) == {
+        "Aggregate": 1, "FlatMapGroupsInPandas": 1, "Join": 1, "InMemoryRelation": 2,
+    }
+    assert _plan_nodes(out["results"]) == {
+        "Aggregate": 1, "FlatMapGroupsInPandas": 1, "Join": 0, "InMemoryRelation": 1,
+    }
+    # cell statistics, the DM fit, the RM fit and the fits' union rollup
+    assert _plan_nodes(with_fits["results"]) == {
+        "Aggregate": 4, "FlatMapGroupsInPandas": 1, "Join": 1, "InMemoryRelation": 1,
+    }
+    release_pipeline(out)
+    release_pipeline(with_fits)

@@ -613,8 +613,6 @@ def deterministic_walks(
     of walks, steps independent of corpus size. This is the corpus
     generator feeding skip-gram node-embedding training.
     """
-    from meerpipe_spark.cacheutil import persist_tracked
-
     frontier = starts.select(
         seed_col, F.lit(0).alias("step"), "node"
     ).localCheckpoint()
@@ -636,20 +634,11 @@ def deterministic_walks(
             # corrupt node ids above 10^12 when decoded by substr/CAST.
             F.lpad(F.col("dst").cast("string"), 19, "0"),
         )
-        # r14 job cut (guide §5 driver latency): the step is a LAZY
-        # persist — the cache is filled by whichever action touches it
-        # first (usually the next step's frontier broadcast), so both
-        # consumers (next step + the output union) share one execution
-        # without spending an eager checkpoint job per step. persist is
-        # also the safer storage class (a lost cached partition
-        # recomputes from lineage; a lost checkpoint block is an
-        # error), and the walk state is small, so the per-step plan
-        # nesting stays trivial at steps <= O(10). The early-stop test
-        # runs every OTHER step: an empty frontier joins to an empty
-        # frontier and unions no rows, so checking late is
-        # value-identical — it only delays the break by one cheap
-        # empty step while halving the per-step count jobs.
-        frontier = persist_tracked(
+        # eager checkpoint per step: the step feeds both the next step
+        # and the output union, and without a lineage cut every step's
+        # plan nests all earlier steps, so plan size (and driver
+        # memory) grows with ``steps`` until the driver runs out
+        frontier = (
             _bcast_small(frontier, n_walks)
             .join(edges, frontier["node"] == edges["src"])
             .groupBy(seed_col)
@@ -659,8 +648,9 @@ def deterministic_walks(
                 F.lit(t).alias("step"),
                 F.expr("CAST(substr(k, 34) AS BIGINT)").alias("node"),
             )
+            .localCheckpoint()
         )
-        if t % 2 == 0 and frontier.count() == 0:
+        if frontier.isEmpty():  # every walk reached a sink
             break
         out = out.unionByName(frontier)
     return out
@@ -782,11 +772,8 @@ def node2vec_walks(
             F.lit("|"),
             F.lpad(F.col("dst").cast("string"), 19, "0"),
         )
-        # r14 job cut: lazy persist + every-other-step early-stop test
-        # (see deterministic_walks for the full rationale — empty
-        # frontiers propagate empty, so the late check is
-        # value-identical)
-        frontier = persist_tracked(
+        # eager per-step checkpoint: see deterministic_walks
+        frontier = (
             rep.groupBy(seed_col)
             .agg(F.min(key).alias("k"), F.max("node").alias("_prev"))
             .select(
@@ -795,8 +782,9 @@ def node2vec_walks(
                 F.expr("CAST(substr(k, 34) AS BIGINT)").alias("node"),
                 "_prev",
             )
+            .localCheckpoint()
         )
-        if t % 2 == 0 and frontier.count() == 0:
+        if frontier.isEmpty():
             break
         out = out.unionByName(frontier.select(seed_col, "step", "node"))
     return out
@@ -1102,9 +1090,7 @@ def _fdiv(x: str, d: str) -> str:
     return f"(({x}) - pmod({x}, {d})) div ({d})"
 
 
-def _shift_normalize(
-    w: DataFrame, scale_bits: int, checkpoint: bool = True
-) -> DataFrame:
+def _shift_normalize(w: DataFrame, scale_bits: int) -> DataFrame:
     """Renormalize an integer vector (node, w) to ∞-norm < 2^scale_bits
     by an exact power-of-two floor-division — the cross-engine-safe
     substitute for dividing by the (irrational) L2 norm: s =
@@ -1114,15 +1100,14 @@ def _shift_normalize(
     Power iteration only needs direction — any deterministic rescale
     preserves the fixed point.
 
-    r13: the INPUT vector is materialized (eager vocab-sized
-    checkpoint) instead of the output, because BOTH the stats subtree
-    (broadcast max|w|) and the projection reference ``w`` and Spark
-    does not dedupe shared subtrees — with a lazy input, every
-    reference re-executed the whole matvec, tripling the per-round
-    work across the two loop references.  The normalized output stays
-    a cheap projection over the leaf (re-running it per consumer is a
-    vocab-sized scan, not a matvec).  ``checkpoint`` retained for call
-    compatibility; it is now a no-op."""
+    The INPUT vector is materialized (eager vocab-sized checkpoint)
+    instead of the output, because BOTH the stats subtree (broadcast
+    max|w|) and the projection reference ``w`` and Spark does not
+    dedupe shared subtrees — with a lazy input, every reference
+    re-executed the whole matvec, tripling the per-round work across
+    the two loop references. The normalized output stays a cheap
+    projection over the leaf (re-running it per consumer is a
+    vocab-sized scan, not a matvec)."""
     w = w.localCheckpoint()
     stats = w.agg(
         F.greatest(F.max(F.abs(F.col("w"))), F.lit(1).cast("bigint")).alias("_mx")
@@ -1136,49 +1121,6 @@ def _shift_normalize(
             " AS DOUBLE)) AS BIGINT) AS _d",
         )
         .selectExpr("node", _fdiv("w", "_d") + " AS x")
-    )
-
-
-def _fused_norm(
-    w: DataFrame, scale_bits: int, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """r14 job-count fusion (VERDICT r13 item 1, guide §5 driver
-    latency): renormalize (node, w) WITHOUT the per-round scalar
-    broadcast job — greatest(max(abs(w)) OVER (), 1) rides an
-    unpartitioned window over the vector, so the matvec, the max
-    statistic and the floor-division all execute inside ONE job with
-    no shared subtree (the plan is linear, so no per-round
-    materialization is needed for dedup either). The single-partition
-    window is exactly as large as the node-sized state the caller
-    already deems broadcastable — this helper must only be used under
-    the ``_BCAST_STATE_MAX_ROWS`` ceiling (above it
-    ``_shift_normalize`` keeps the agg+broadcast shape).
-
-    Value-identical to ``_shift_normalize``: the window max over all
-    rows IS the aggregate max, and every subsequent op is the same
-    integer floor-division. ``carry`` names extra columns to pass
-    through unchanged (per-node loop constants such as v₁)."""
-    from pyspark.sql import Window as W
-
-    win = W.partitionBy()
-    keep = [F.col(c) for c in carry]
-    return (
-        w.select(
-            "node",
-            "w",
-            F.greatest(
-                F.max(F.abs(F.col("w"))).over(win), F.lit(1).cast("bigint")
-            ).alias("_mx"),
-            *keep,
-        )
-        .selectExpr(
-            "node",
-            "w",
-            f"CAST(pow(2.0D, CAST(greatest(length(bin(_mx)) - {scale_bits}, 0)"
-            " AS DOUBLE)) AS BIGINT) AS _d",
-            *carry,
-        )
-        .selectExpr("node", _fdiv("w", "_d") + " AS x", *carry)
     )
 
 
@@ -1244,10 +1186,8 @@ def ppmi_spectral_embeddings(
        ppmi_downshift_bits for larger vocabularies).
 
     Scale shape: vocab-sized state, matrix-sized rounds, lineage
-    truncated every other round (the pagerank every-3 discipline: the
-    checkpoint is the round's fixed cost once state is node-sized, and
-    a 2-round plan is constant-depth — halves materializations at
-    scale, wall-time-neutral at sf0.1); the scalar aggregates
+    truncated every round (each round's matvec output is checkpointed
+    before it is renormalized, _shift_normalize); the scalar aggregates
     (max|w|, p, q) ride as broadcast one-row joins — nothing collects.
     Init: v₁ = all-ones·2^sb (the Perron direction's sign), v₂ = ±2^sb
     by node parity (deterministic and not parallel to v₁).
@@ -1293,38 +1233,12 @@ def ppmi_spectral_embeddings(
     vocab = m.select(F.col("center").alias("node")).distinct().localCheckpoint()
     n_vocab = vocab.count()  # cache-read job; drives the matvec broadcast
 
-    # r14 (VERDICT r13 item 1): the power rounds were the registry's
-    # slowest lane and purely driver-job-latency-bound at bench SF
-    # (166 jobs × ~100 ms scheduler latency, 8v32-core ratio 0.99).
-    # Under the broadcast ceiling the rounds now run FUSED — scalar
-    # stats ride unpartitioned windows inside the round's one job,
-    # loop-invariant constants (v₁, b, q) are checkpointed once, and
-    # phase-1 lineage truncates every other round — while above the
-    # ceiling the r13 agg+broadcast/shuffle shape is kept verbatim
-    # (node-sized state that cannot be broadcast cannot sit in one
-    # window partition either). Both paths compute bit-identical
-    # integers; the ceiling-0 equality test pins it.
-    if n_vocab > _BCAST_STATE_MAX_ROWS:
-        return _ppmi_rounds_shuffle(m, vocab, n_vocab, iters, scale_bits)
-    return _ppmi_rounds_fused(m, vocab, n_vocab, iters, scale_bits)
-
-
-def _ppmi_rounds_shuffle(
-    m: DataFrame, vocab: DataFrame, n_vocab: int, iters: int, scale_bits: int
-) -> DataFrame:
-    """The r13 power-round shape, kept verbatim as the above-ceiling
-    fallback: shuffle matvec, per-round agg+broadcast renorm scalars.
-    See ppmi_spectral_embeddings for the exactness argument."""
     two_sb = 1 << scale_bits
     v = vocab.select(
         "node", F.lit(two_sb).cast("bigint").alias("x")
     ).localCheckpoint()
-    for r in range(iters):
-        # truncate lineage every OTHER round: the checkpoint job is the
-        # round's fixed cost once state is vocab-sized, and a 2-round
-        # plan (join+agg+scalar ×2) is still constant-depth
-        v = _shift_normalize(_matvec(m, v, n_vocab), scale_bits,
-                             checkpoint=(r % 2 == 1) or r == iters - 1)
+    for _ in range(iters):
+        v = _shift_normalize(_matvec(m, v, n_vocab), scale_bits)
     v1 = v
 
     b = (
@@ -1336,7 +1250,7 @@ def _ppmi_rounds_shuffle(
     u = vocab.selectExpr(
         "node", f"{two_sb}L * (1L - 2L * pmod(node, 2)) AS x"
     ).localCheckpoint()
-    for r in range(iters):
+    for _ in range(iters):
         a = _matvec(m, u, n_vocab)
         p = (
             v1.select("node", F.col("x").alias("x1"))
@@ -1356,157 +1270,11 @@ def _ppmi_rounds_shuffle(
                 f"w * {two_sb}L - ({_fdiv('bt * t', '4L')}) AS w",
             )
         )
-        u = _shift_normalize(w2, scale_bits,
-                             checkpoint=(r % 2 == 1) or r == iters - 1)
+        u = _shift_normalize(w2, scale_bits)
 
     return (
         v1.select("node", F.col("x").alias("e1"))
         .join(_bcast_small(u.select("node", F.col("x").alias("e2")), n_vocab), "node")
-    )
-
-
-def _ppmi_rounds_fused(
-    m: DataFrame, vocab: DataFrame, n_vocab: int, iters: int, scale_bits: int
-) -> DataFrame:
-    """r14 fused power rounds (vocab under the broadcast ceiling).
-
-    Job shape per round — the whole point of this path:
-
-    - phase 1: ONE broadcast job (the state vector into the matvec)
-      plus a lineage checkpoint every other round. The renorm max
-      rides an unpartitioned window inside the same job
-      (:func:`_fused_norm`); nothing else executes. The intermediate
-      un-checkpointed round has exactly ONE consumer (the next round's
-      broadcast), so it still executes exactly once — no re-execution
-      is traded for the saved checkpoint, at any scale.
-    - phase 2: ONE checkpointed state frame S per round carrying the
-      vector xu, the loop constants x1 (= v₁), bt, q = Σx1², and the
-      round scalar p = Σ x1·xu (windows attached at build). Round r
-      is: matvec (broadcast of S's context projection, with p carried
-      through the agg as max of a constant column) → rejoin S's
-      constants projection (broadcast, checkpoint read) → deflation +
-      renorm + next p, all windows in the same pass → one checkpoint.
-      ~3 jobs versus the r13 shape's ~7 (matvec ckpt, p agg broadcast,
-      q broadcast, t broadcast, b broadcast, u broadcast, stats
-      broadcast). S must stay eagerly checkpointed: it is referenced
-      twice per round, and a lazy persist duplicates the child subtree
-      per reference (2^iters logical-plan growth — measured driver
-      OOM; see the in-loop comment).
-
-    Exactness vs the shuffle path: window max/sum over all rows ARE
-    the aggregate max/sum (bigint, order-free); max("p")/max over a
-    per-frame-constant column is that constant; the w2 row set is
-    unchanged (a and C both cover exactly the vocab); every division
-    is the same positive-mod floor-div. The ceiling-0 equality test
-    runs both paths on the same pairs and asserts identical rows."""
-    from pyspark.sql import Window as W
-
-    two_sb = 1 << scale_bits
-    win = W.partitionBy()
-
-    v = vocab.select(
-        "node", F.lit(two_sb).cast("bigint").alias("x")
-    ).localCheckpoint()
-    for r in range(iters):
-        v = _fused_norm(_matvec(m, v, n_vocab), scale_bits)
-        # every-3 lineage truncation: phase-1 state has exactly ONE
-        # consumer per round (the next round's broadcast), so the
-        # un-checkpointed intermediates still execute exactly once at
-        # any scale; a 3-round plan is constant-depth
-        if (r % 3 == 2) or r == iters - 1:
-            v = v.localCheckpoint()
-    v1 = v
-
-    # Phase-2 state S carries EVERYTHING the round needs per node —
-    # the vector xu, the loop constants x1 (= v₁), bt (= b div 2^12)
-    # and q = Σx1², and the round scalar p = Σ x1·xu — as ONE frame,
-    # eagerly checkpointed per round. The checkpoint must stay EAGER:
-    # S is referenced TWICE per round (both broadcasts), so a lazy
-    # persist duplicates the child subtree per reference and the
-    # logical plan grows 2^iters (measured: driver OOM in
-    # generateTreeString at iters=6 on sf0.1 — the lineage barrier is
-    # load-bearing, not hygiene).
-    b = _matvec(m, v1, n_vocab).selectExpr(
-        "node", "w div 4096L AS bt"  # w ≥ 0: div == floor-div
-    )
-    s = (
-        v1.select("node", F.col("x").alias("x1"))
-        .join(_bcast_small(b, n_vocab), "node")
-        .join(
-            _bcast_small(
-                vocab.selectExpr(
-                    "node", f"{two_sb}L * (1L - 2L * pmod(node, 2)) AS xu"
-                ),
-                n_vocab,
-            ),
-            "node",
-        )
-        .select(
-            "node",
-            "x1",
-            "bt",
-            "xu",
-            F.sum(F.col("x1") * F.col("x1")).over(win).alias("q"),
-            F.sum(F.col("x1") * F.col("xu")).over(win).alias("p"),
-        )
-        .localCheckpoint()
-    )
-    for r in range(iters):
-        a = (
-            m.join(
-                _bcast_small(
-                    s.select(
-                        F.col("node").alias("context"),
-                        F.col("xu").alias("x"),
-                        "p",
-                    ),
-                    n_vocab,
-                ),
-                "context",
-            )
-            .groupBy("center")
-            # p is constant over every row of the join: max() recovers
-            # the scalar through the aggregation without a second pass
-            .agg(F.sum(F.col("m") * F.col("x")).alias("w"), F.max("p").alias("p"))
-            .select(F.col("center").alias("node"), "w", "p")
-        )
-        w2 = (
-            a.join(_bcast_small(s.select("node", "x1", "bt", "q"), n_vocab), "node")
-            .selectExpr(
-                "node",
-                "x1",
-                "bt",
-                "q",
-                "w",
-                f"({_fdiv(f'p * {two_sb}L', 'q')}) AS t",
-            )
-            .selectExpr(
-                "node",
-                "x1",
-                "bt",
-                "q",
-                f"w * {two_sb}L - ({_fdiv('bt * t', '4L')}) AS w",
-            )
-        )
-        nrm = _fused_norm(w2, scale_bits, carry=("x1", "bt", "q"))
-        s = (
-            nrm.select(
-                "node",
-                "x1",
-                "bt",
-                "q",
-                F.col("x").alias("xu"),
-                F.sum(F.col("x1") * F.col("x")).over(win).alias("p"),
-            )
-            .localCheckpoint()
-        )
-
-    return (
-        v1.select("node", F.col("x").alias("e1"))
-        .join(
-            _bcast_small(s.select("node", F.col("xu").alias("e2")), n_vocab),
-            "node",
-        )
     )
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -186,6 +187,54 @@ CUBE_SCHEMA = T.StructType(
 )
 
 
+def _obs_id_of(path: str) -> str:
+    """An archive's obs_id: its file stem."""
+    return path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
+
+
+def archive_columns(data: bytes, hdu_index: int) -> dict[str, np.ndarray] | None:
+    """Parse one archive's bytes into the cube's columns (every
+    ``CUBE_SCHEMA`` column but obs_id) as numpy arrays; None when the
+    HDU is missing or holds no subint.
+
+    Vectorized end to end: the (npol, nchan, nbin) cube of each subint
+    becomes index grids + ravels, concatenated per file. No per-cell
+    Python loop anywhere.
+    """
+    hdr = None
+    for hdu, cards, _, _ in _iter_headers(data):
+        if hdu == hdu_index:
+            hdr = dict(
+                (k, v) for k, v, _c in (_parse_card(c) for c in cards) if v is not None
+            )
+            break
+    if hdr is None:
+        return None
+    npol, nchan, nbin = int(hdr["NPOL"]), int(hdr["NCHAN"]), int(hdr["NBIN"])
+    table = parse_bintable(data, hdu_index)
+
+    pol_idx, chan_idx, bin_idx = np.indices((npol, nchan, nbin))
+    pol_r = pol_idx.ravel().astype(np.int32)
+    chan_r = chan_idx.ravel().astype(np.int32)
+    bin_r = bin_idx.ravel().astype(np.int32)
+
+    cols = {k: [] for k in ("subint", "pol", "chan", "bin", "freq", "value", "weight")}
+    for subint, row in table.iterrows():
+        freqs = np.asarray(row["DAT_FREQ"], dtype=np.float64)
+        wts = np.asarray(row["DAT_WTS"], dtype=np.float64)
+        vals = np.asarray(row["DATA"], dtype=np.float64).reshape(npol, nchan, nbin)
+        cols["subint"].append(np.full(pol_r.shape, int(subint), dtype=np.int32))
+        cols["pol"].append(pol_r)
+        cols["chan"].append(chan_r)
+        cols["bin"].append(bin_r)
+        cols["freq"].append(freqs[chan_r])
+        cols["value"].append(vals.ravel())
+        cols["weight"].append(wts[chan_r])
+    if not cols["subint"]:
+        return None
+    return {k: np.concatenate(v) for k, v in cols.items()}
+
+
 def read_archive_cube(
     spark: SparkSession,
     path_glob: str,
@@ -202,56 +251,17 @@ def read_archive_cube(
     Runs as binaryFile + mapInPandas: one task per archive file, Arrow
     batches out — at fleet scale the per-file parse is embarrassingly
     parallel and the result lands directly in obs_id-partitioned parquet
-    (sinks.write_cube).
+    (sinks.write_cube). The parse is ``archive_columns``, shared with
+    the ``fits_archive`` DataSource.
     """
     binary = spark.read.format("binaryFile").load(path_glob)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                hdr = None
-                for hdu, cards, _, _ in _iter_headers(data):
-                    if hdu == hdu_index:
-                        hdr = dict(
-                            (k, v)
-                            for k, v, _c in (_parse_card(c) for c in cards)
-                            if v is not None
-                        )
-                        break
-                if hdr is None:
-                    continue
-                npol = int(hdr["NPOL"])
-                nchan = int(hdr["NCHAN"])
-                nbin = int(hdr["NBIN"])
-                table = parse_bintable(data, hdu_index)
-                obs_id = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                out = []
-                import numpy as np
-
-                for subint, row in table.iterrows():
-                    freqs = np.asarray(row["DAT_FREQ"], dtype=np.float64)
-                    wts = np.asarray(row["DAT_WTS"], dtype=np.float64)
-                    vals = np.asarray(row["DATA"], dtype=np.float64).reshape(
-                        npol, nchan, nbin
-                    )
-                    pol_idx, chan_idx, bin_idx = np.indices((npol, nchan, nbin))
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "obs_id": obs_id,
-                                "subint": int(subint),
-                                "pol": pol_idx.ravel().astype("int32"),
-                                "chan": chan_idx.ravel().astype("int32"),
-                                "bin": bin_idx.ravel().astype("int32"),
-                                "freq": freqs[chan_idx.ravel()],
-                                "value": vals.ravel(),
-                                "weight": wts[chan_idx.ravel()],
-                            }
-                        )
-                    )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                cols = archive_columns(bytes(content), hdu_index)
+                if cols is not None:
+                    yield pd.DataFrame({"obs_id": _obs_id_of(path), **cols})
 
     return binary.select("path", "content").mapInPandas(parse, CUBE_SCHEMA)
 
@@ -301,8 +311,6 @@ def parse_image_hdu(data: bytes, hdu_index: int = 0):
     BSCALE/BZERO applied; NaN blanks preserved (the 3400 mK fallback is
     the LOOKUP's job — skymap.tsky_lband_jy — so the stored table stays
     a faithful copy of the survey)."""
-    import numpy as np
-
     for hdu, cards, data_start, data_len in _iter_headers(data):
         if hdu != hdu_index:
             continue
@@ -347,8 +355,6 @@ def read_fits_raster(
     binary = spark.read.format("binaryFile").load(path_glob)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
                 arr = parse_image_hdu(bytes(content), hdu_index)

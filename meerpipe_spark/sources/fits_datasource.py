@@ -8,11 +8,11 @@ content handling (the driver only lists paths; bytes are read in the
 executors).
 
 Batch AND streaming reads emit ``pyarrow.RecordBatch`` (VERDICT r7
-item 2): the per-file cube is built with the same vectorized numpy
-reshape as ``sources/fits.py::read_archive_cube`` and crosses the
-Python→JVM boundary as Arrow columns, never per-cell tuples — a 1024
-chan × 1024 bin subint is 4 numpy ravels + 8 Arrow arrays instead of
-~4M ``yield`` calls.
+item 2): the per-file cube comes from ``sources/fits.py::
+archive_columns`` (the parser ``read_archive_cube`` also runs) and
+crosses the Python→JVM boundary as Arrow columns, never per-cell
+tuples — a 1024 chan × 1024 bin subint is 4 numpy ravels + 8 Arrow
+arrays instead of ~4M ``yield`` calls.
 
 Usage:
     from meerpipe_spark.sources.fits_datasource import FitsArchiveDataSource
@@ -25,13 +25,14 @@ from __future__ import annotations
 import glob as _glob
 import os as _os
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
+
+from meerpipe_spark.sources.fits import _obs_id_of, archive_columns
 
 CUBE_DDL = (
     "obs_id string, subint int, pol int, chan int, bin int, "
@@ -66,71 +67,29 @@ class _FilePartition(InputPartition):
 
 
 def _read_archive_batches(path: str, hdu_index: int):
-    """Parse one archive file into an iterator of pyarrow.RecordBatch.
-
-    Vectorized end to end: the (npol, nchan, nbin) cube for each subint
-    becomes index grids + ravels (the `read_archive_cube` reshape,
-    sources/fits.py:189), concatenated per file and sliced into
-    ≤_ARROW_BATCH_ROWS batches. No per-cell Python loop anywhere.
-    """
-    import numpy as np
+    """Parse one archive file into an iterator of pyarrow.RecordBatch:
+    ``archive_columns`` sliced into ≤_ARROW_BATCH_ROWS batches."""
     import pyarrow as pa
 
-    from meerpipe_spark.sources.fits import (
-        _iter_headers,
-        _parse_card,
-        parse_bintable,
-    )
-
     with open(path, "rb") as f:
-        data = f.read()
-    hdr = None
-    for hdu, cards, _, _ in _iter_headers(data):
-        if hdu == hdu_index:
-            hdr = dict(
-                (k, v) for k, v, _c in (_parse_card(c) for c in cards) if v is not None
-            )
-            break
-    if hdr is None:
+        cols = archive_columns(f.read(), hdu_index)
+    if cols is None:
         return
-    npol, nchan, nbin = int(hdr["NPOL"]), int(hdr["NCHAN"]), int(hdr["NBIN"])
-    table = parse_bintable(data, hdu_index)
-    obs_id = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-
-    pol_idx, chan_idx, bin_idx = np.indices((npol, nchan, nbin))
-    pol_r = pol_idx.ravel().astype(np.int32)
-    chan_r = chan_idx.ravel().astype(np.int32)
-    bin_r = bin_idx.ravel().astype(np.int32)
-
-    cols = {k: [] for k in ("subint", "pol", "chan", "bin", "freq", "value", "weight")}
-    for subint, row in table.iterrows():
-        freqs = np.asarray(row["DAT_FREQ"], dtype=np.float64)
-        wts = np.asarray(row["DAT_WTS"], dtype=np.float64)
-        vals = np.asarray(row["DATA"], dtype=np.float64).reshape(npol, nchan, nbin)
-        cols["subint"].append(np.full(pol_r.shape, int(subint), dtype=np.int32))
-        cols["pol"].append(pol_r)
-        cols["chan"].append(chan_r)
-        cols["bin"].append(bin_r)
-        cols["freq"].append(freqs[chan_r])
-        cols["value"].append(vals.ravel())
-        cols["weight"].append(wts[chan_r])
-    if not cols["subint"]:
-        return
-    flat = {k: np.concatenate(v) for k, v in cols.items()}
-    n = len(flat["subint"])
+    obs_id = _obs_id_of(path)
+    n = len(cols["subint"])
     schema = _arrow_schema()
     for lo in range(0, n, _ARROW_BATCH_ROWS):
         hi = min(lo + _ARROW_BATCH_ROWS, n)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.repeat(pa.scalar(obs_id, type=pa.string()), hi - lo),
-                pa.array(flat["subint"][lo:hi]),
-                pa.array(flat["pol"][lo:hi]),
-                pa.array(flat["chan"][lo:hi]),
-                pa.array(flat["bin"][lo:hi]),
-                pa.array(flat["freq"][lo:hi]),
-                pa.array(flat["value"][lo:hi]),
-                pa.array(flat["weight"][lo:hi]),
+                pa.array(cols["subint"][lo:hi]),
+                pa.array(cols["pol"][lo:hi]),
+                pa.array(cols["chan"][lo:hi]),
+                pa.array(cols["bin"][lo:hi]),
+                pa.array(cols["freq"][lo:hi]),
+                pa.array(cols["value"][lo:hi]),
+                pa.array(cols["weight"][lo:hi]),
             ],
             schema=schema,
         )
@@ -179,20 +138,9 @@ class FitsArchiveDataSource(DataSource):
         return FitsArchiveReader(self.options)
 
     def streamReader(self, schema) -> "FitsArchiveStreamReader":
-        # default: executor-side micro-batches (one InputPartition per
-        # newly-arrived file; bytes never pass through the driver).
-        # .option("simple_stream", "true") falls back to the
-        # driver-prefetch SimpleDataSourceStreamReader via the engine's
-        # documented PySparkNotImplementedError fallback.
-        if self.options.get("simple_stream", "false").lower() == "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (simple_stream=true)"},
-            )
+        # executor-side micro-batches: one InputPartition per
+        # newly-arrived file; bytes never pass through the driver
         return FitsArchiveStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> "FitsArchiveSimpleStreamReader":
-        return FitsArchiveSimpleStreamReader(self.options)
 
 
 # ---------------------------------------------------------------------------
@@ -203,10 +151,6 @@ class FitsArchiveDataSource(DataSource):
 # Spark must still apply; obs_id equality is honored by pruning, so it
 # is NOT returned).
 # ---------------------------------------------------------------------------
-
-
-def _obs_id_of(path: str) -> str:
-    return path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
 
 
 class _PruningMixin:
@@ -262,14 +206,6 @@ class FitsArchivePruningReader(_PruningMixin, FitsArchiveReader):
 # guarantee cannot be enforced from the consumer side — so we don't
 # assume it.
 # ---------------------------------------------------------------------------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
-
-
-def _new_paths(listing, start: dict):
-    seen = start.get("seen", {})
-    return [p for p in listing if p not in seen]
-
 
 class FitsArchiveStreamReader(DataSourceStreamReader):
     """Executor-side streaming reader (VERDICT r7 item 3): the driver
@@ -362,40 +298,3 @@ class FitsArchiveStreamReader(DataSourceStreamReader):
         e = set(end.get("seen", {}))
         if e >= self._last_end:
             self._last_end = e
-
-
-class FitsArchiveSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Driver-prefetch variant (the 'simple' API contract: rows are
-    read on the driver and cached for replay). Same order-independent
-    explicit-set offsets as the executor-side reader."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        self.hdu_index = int(options.get("hdu", "1"))
-
-    def _listing(self):
-        return sorted(_glob.glob(self.path))
-
-    def initialOffset(self) -> dict:
-        return {"seen": {}}
-
-    def _rows_for(self, paths):
-        # materialized, not a generator: the simple stream reader's rows
-        # are pickled through the driver (that is the 'simple' contract —
-        # prefetch-and-cache). Tuples, not Arrow: the engine's prefetch
-        # cache copy.copy()s a list_iterator to serve replays.
-        rows = []
-        for p in paths:
-            for batch in _read_archive_batches(p, self.hdu_index):
-                rows.extend(tuple(r) for r in zip(*[c.to_pylist() for c in batch.columns]))
-        return rows
-
-    def read(self, start: dict):
-        listing = self._listing()
-        new = _new_paths(listing, start)
-        end = {"seen": {**start.get("seen", {}), **{p: True for p in new}}}
-        return iter(self._rows_for(new)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        paths = sorted(set(end.get("seen", {})) - set(start.get("seen", {})))
-        return iter(self._rows_for(paths))

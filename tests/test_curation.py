@@ -4,6 +4,7 @@ behavior, and the connected-components fixpoint."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from meerpipe_spark.operators.curation import (
@@ -331,6 +332,7 @@ def test_hash_split_deterministic_and_dedup_stable(spark):
     assert {s for ss in by_text.values() for s in ss} == {"train", "val", "test"}
 
 
+@pytest.mark.slow
 def test_cc_contraction_matches_propagation_small_graphs(spark):
     """Same (node, component) map from both algorithms on chains, cycles,
     cross-links and islands."""
@@ -354,6 +356,7 @@ def test_cc_contraction_matches_propagation_small_graphs(spark):
         assert cont == prop, edges
 
 
+@pytest.mark.slow
 def test_cc_contraction_long_path_within_log_rounds(spark):
     """VERDICT r3 #8: a 10^4-node path graph (diameter 10^4) must
     converge within max_iters=15 rounds under contraction — propagation
@@ -371,6 +374,7 @@ def test_cc_contraction_long_path_within_log_rounds(spark):
     assert agg.n == n and agg.ncomp == 1 and agg.maxc == 0
 
 
+@pytest.mark.slow
 def test_cc_contraction_random_graph_matches_propagation(spark):
     """Randomized (fixed-seed) sparse graph equivalence."""
     import random
@@ -458,6 +462,7 @@ def test_profile_table_stats_and_single_pass(spark):
     assert plan.count("LocalTableScan") + plan.count("Scan ExistingRDD") <= 2
 
 
+@pytest.mark.slow
 def test_cc_auto_long_path_through_default_entry(spark):
     """VERDICT r4 #3: the DEFAULT entry point must be safe on the
     adversarial topology — a 10^4-node path (diameter 10^4) exceeds the

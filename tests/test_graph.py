@@ -1,14 +1,40 @@
-"""Fixed-point PageRank: exactness, invariance, and ranking sanity."""
+"""Graph operators: fixed-point PageRank exactness and invariance,
+ranking sanity, k-core/k-truss peeling, walk generation."""
 
 from __future__ import annotations
 
+import hashlib
+
+import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Row
 
+import meerpipe_spark.operators.graph as G
 from meerpipe_spark.operators.graph import PAGERANK_SCALE, pagerank_fixed_point
 
 
 def _edges(spark, pairs):
     return spark.createDataFrame([Row(src=a, dst=b) for a, b in pairs])
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture()
+def copurchase_pairs(spark, sf_dir):
+    from meerpipe_spark.io import load_tables
+
+    li = load_tables(spark, sf_dir)["lineitem"]
+    pp = li.select("l_orderkey", "l_partkey").distinct()
+    a = pp.select(F.col("l_orderkey").alias("kk"), F.col("l_partkey").alias("src"))
+    b = pp.select(F.col("l_orderkey").alias("kk"), F.col("l_partkey").alias("dst"))
+    return (
+        a.join(b, "kk")
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
 
 
 def test_cycle_ranks_are_equal(spark):
@@ -113,8 +139,6 @@ def test_bcast_state_ceiling_is_cost_only(spark, monkeypatch):
     per-round join when its known row count fits _BCAST_STATE_MAX_ROWS.
     The ceiling must be COST-ONLY — forcing the shuffle path (ceiling 0)
     must reproduce the broadcast path's ranks to the last bit."""
-    import meerpipe_spark.operators.graph as G
-
     pairs = [(f"n{i}", f"n{(i * 7 + 3) % 40}") for i in range(200)]
     e = _edges(spark, pairs)
     with_bcast = sorted(map(tuple, pagerank_fixed_point(e, iters=4).collect()))
@@ -126,8 +150,6 @@ def test_bcast_state_ceiling_is_cost_only(spark, monkeypatch):
 def test_bcast_small_hint_semantics(spark):
     """_bcast_small applies a BROADCAST hint below the ceiling and is a
     strict no-op (same object) above it or with unknown cardinality."""
-    import meerpipe_spark.operators.graph as G
-
     a = spark.range(100).toDF("k")
     b = spark.range(50).toDF("k")
     j = a.join(G._bcast_small(b, 50), "k")
@@ -137,3 +159,104 @@ def test_bcast_small_hint_semantics(spark):
     assert "BroadcastHashJoin" in plan
     assert G._bcast_small(b, G._BCAST_STATE_MAX_ROWS + 1) is b
     assert G._bcast_small(b, None) is b
+
+
+def test_ktruss_incremental_equals_full_reenumeration(spark, monkeypatch, copurchase_pairs):
+    from meerpipe_spark.operators.graph import k_truss
+
+    co = copurchase_pairs.localCheckpoint()
+    # k=4 on the co-purchase graph peels progressively (several
+    # non-converged rounds), so the incremental decrement path really
+    # fires; rounds=4 exercises the post-loop final-support branch too
+    fast = _rows(k_truss(co, k=4, rounds=4))
+    monkeypatch.setattr(G, "_BCAST_STATE_MAX_ROWS", 0)
+    slow = _rows(k_truss(co, k=4, rounds=4))
+    assert fast and fast == slow
+
+
+def test_ktruss_incremental_multi_removed_edge_triangles(spark, monkeypatch):
+    # Adversarial micro-graph: two triangles sharing an edge plus a
+    # pendant triangle chain, where one peel removes SEVERAL edges of
+    # the same dead triangle — the distinct-on-sorted-triple step must
+    # decrement each survivor exactly once. Compare against the full
+    # re-enumeration on the same input.
+    from meerpipe_spark.operators.graph import k_truss
+
+    edges = [
+        (1, 2), (1, 3), (2, 3),          # triangle A
+        (2, 4), (3, 4),                  # triangle B shares (2,3)
+        (4, 5), (4, 6), (5, 6),          # triangle C hangs off 4
+        (1, 4),                          # closes extra triangles
+        (6, 7),                          # zero-triangle pendant edge
+    ]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint").localCheckpoint()
+    fast = _rows(k_truss(df, k=3, rounds=3))
+    fast4 = _rows(k_truss(df, k=4, rounds=3))
+    monkeypatch.setattr(G, "_BCAST_STATE_MAX_ROWS", 0)
+    assert fast == _rows(k_truss(df, k=3, rounds=3))
+    assert fast4 == _rows(k_truss(df, k=4, rounds=3))
+
+
+def _replay_walks(edge_list, starts, steps, weight=None):
+    """Sequential replay of the md5-argmin walk draw. ``weight(prev,
+    dst)`` gives the node2vec replica count; None is the uniform
+    DeepWalk draw (one replica, no replica index in the key)."""
+    outs = {}
+    for a, b in edge_list:
+        outs.setdefault(a, []).append(b)
+    got = []
+    for wid, node in starts:
+        prev = None
+        got.append((wid, 0, node))
+        for t in range(1, steps + 1):
+            keys = []
+            for dst in outs[node]:
+                if weight is None:
+                    tags = [f"{wid}:{t}:{dst}"]
+                else:
+                    tags = [f"{wid}:{t}:{dst}:{i}" for i in range(1, weight(prev, dst) + 1)]
+                keys += [(hashlib.md5(s.encode()).hexdigest() + "|" + str(dst).zfill(19), dst)
+                         for s in tags]
+            prev, node = node, min(keys)[1]
+            got.append((wid, t, node))
+    return sorted(got)
+
+
+def test_walk_frontiers_checkpointed_per_step(spark):
+    """Both walk generators cut lineage at every step: the output plan
+    is a union of one checkpoint leaf per step (no cached relation
+    whose plan nests every earlier step), so a long walk neither grows
+    the driver's plan nor runs it out of memory, and its rows still
+    equal a sequential replay of the md5 argmin."""
+    from meerpipe_spark.operators.graph import deterministic_walks, node2vec_walks
+
+    n = 50  # a ring plus chords: no sinks, degree 2-4
+    und = [(i, (i + 1) % n) for i in range(n)] + [(i, (i + 7) % n) for i in range(0, n, 3)]
+    both = und + [(b, a) for a, b in und]
+    adj = set(both)
+    edges = spark.createDataFrame(both, "src BIGINT, dst BIGINT")
+    start_rows = [(100, 0), (200, 13), (300, 26), (400, 49)]
+    starts = spark.createDataFrame(start_rows, "walk_id BIGINT, node BIGINT")
+    p_, q_, repl = 0.5, 2.0, 4
+
+    def n2v_weight(prev, dst):
+        if prev is None:
+            return repl
+        if dst == prev:
+            return max(1, round(repl / p_))
+        return repl if (prev, dst) in adj else max(1, round(repl / q_))
+
+    def walks(steps):
+        return (
+            deterministic_walks(edges, starts, steps=steps),
+            node2vec_walks(edges, starts, steps=steps, p=p_, q=q_, replication=repl),
+        )
+
+    for df in walks(4):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert names == ["LogicalRDD"] * 5, names
+
+    dw, n2v = walks(24)
+    assert _rows(dw) == _replay_walks(both, start_rows, 24)
+    assert _rows(n2v) == _replay_walks(both, start_rows, 24, n2v_weight)

@@ -236,6 +236,7 @@ def test_results_doc_full_fits_wired(spark):
     release_pipeline(out)
 
 
+@pytest.mark.slow
 def test_clean_chain_fused_equivalence(spark, cube):
     """The fused one-exchange clean_chain must reproduce the composed
     rcvrstd→surgical→bandwagon chain weight-for-weight — including a
@@ -267,6 +268,7 @@ def test_clean_chain_fused_equivalence(spark, cube):
     assert fused.columns == seeded.columns
 
 
+@pytest.mark.slow
 def test_results_doc_writes_through_ledger_sink(spark, cube, tmp_path):
     """D11 composed with the custom sink: the pipeline's results
     document lands in the two-phase-commit results ledger (staged

@@ -68,6 +68,7 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
     assert cols == {"l_returnflag", "l_discount", "l_tax"}
 
 
+@pytest.mark.slow
 def test_bucketed_colocated_join_query_zero_exchanges(spark, sf_dir):
     """The registered headline query (VERDICT r2 #7) must execute with
     ZERO Exchange nodes — bucketed scans satisfy both the merge join's

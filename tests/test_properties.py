@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
@@ -195,6 +196,7 @@ def test_hll_tracks_exact_cardinality(spark, n, dup_factor, seed):
     assert abs(out.hll_est - n) <= max(4.0, 0.08 * n)
 
 
+@pytest.mark.slow
 @given(
     seed=st.integers(min_value=0, max_value=10**6),
     n_docs=st.integers(min_value=2, max_value=12),
@@ -279,6 +281,7 @@ def _bpe_reference(word_freqs: dict[str, int], steps: int):
     return merges
 
 
+@pytest.mark.slow
 @given(
     st.lists(
         st.text(alphabet="abc", min_size=1, max_size=6),
@@ -393,6 +396,7 @@ def test_deletion_join_matches_brute_force_lev1(spark, names):
     assert got == expected
 
 
+@pytest.mark.slow
 @settings(max_examples=6, deadline=None)
 @given(
     seed=st.integers(0, 10_000),

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import heapq
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -39,6 +40,7 @@ edge_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=6, deadline=None)
 @given(edges=edge_strategy, n_src=st.integers(1, 3))
 def test_sssp_matches_dijkstra(spark, edges, n_src):

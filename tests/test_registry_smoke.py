@@ -21,6 +21,7 @@ from meerpipe_spark.queries import QUERIES
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+@pytest.mark.slow
 def test_every_registered_query_is_callable(spark):
     """One test, whole registry: plan-build every registered callable."""
     failures = []

@@ -34,6 +34,7 @@ def _copurchase_embeddings(spark, sf_dir, iters=6):
     return ppmi_spectral_embeddings(skipgram_pairs(walks, window=2), iters=iters)
 
 
+@pytest.mark.slow
 def test_ppmi_embeddings_invariants(spark, sf_dir):
     """Component 1 is the Perron direction of a nonnegative matrix
     (all entries >= 0), component 2 is a genuine second direction
@@ -54,6 +55,7 @@ def test_ppmi_embeddings_invariants(spark, sf_dir):
     assert abs(cos12) < 0.9
 
 
+@pytest.mark.slow
 def test_ppmi_embeddings_partition_invariant(spark, sf_dir):
     """Exact-bigint iteration: repartitioning the pair counts must not
     move a single output bit (the float formulation this replaces

@@ -175,6 +175,7 @@ def test_train_sample_is_deterministic_threshold(spark):
     assert _train_sample(emb, 500, "vec_id", 200) is emb
 
 
+@pytest.mark.slow
 def test_two_level_assign_invariants(spark):
     from meerpipe_spark.operators.similarity import two_level_assign
 
@@ -193,6 +194,7 @@ def test_two_level_assign_invariants(spark):
     assert sum(1 for r in per if r["nl"] == 1) >= len(per) // 2
 
 
+@pytest.mark.slow
 def test_hard_negatives_large_autok_routes_two_level(spark, monkeypatch):
     """Force the auto-k path above KMEANS_LITERAL_K_MAX and check the
     mining contract end to end on the scale machinery: every returned
@@ -332,6 +334,7 @@ def test_node2vec_walks_match_bruteforce_replay(spark):
     assert backtracks <= 6
 
 
+@pytest.mark.slow
 def test_weighted_pagerank_weights_steer_rank(spark):
     from meerpipe_spark.operators.graph import weighted_pagerank_fixed_point
 
@@ -389,6 +392,7 @@ def test_skipgram_pairs_bruteforce(spark):
     assert got == expect
 
 
+@pytest.mark.slow
 def test_two_level_search_exact_scores_and_recall(spark):
     import math
 

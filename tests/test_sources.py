@@ -561,6 +561,7 @@ def test_fits_datasource_streaming_tail(spark, tmp_path, archive_file):
     assert {r.obs_id for r in got.select("obs_id").distinct().collect()} == {"obs1", "obs2"}
 
 
+@pytest.mark.slow
 def test_fits_stream_drives_incremental_pipeline(spark, tmp_path, archive_file):
     """SURVEY §2.11 composed end to end: observation archives ARRIVE
     through the custom streaming source, each micro-batch runs a
@@ -777,36 +778,6 @@ def test_fits_stream_out_of_order_arrival(spark, tmp_path, archive_file):
     assert counts == {"zz": per_file, "aa": per_file}
 
 
-def test_fits_stream_simple_fallback(spark, tmp_path, archive_file):
-    """.option('simple_stream','true') routes through the driver-side
-    SimpleDataSourceStreamReader; results identical to the batch parse."""
-    import shutil
-
-    from meerpipe_spark.sources.fits_datasource import FitsArchiveDataSource
-
-    path, cube, freqs, wts = archive_file
-    d = tmp_path / "simple"
-    d.mkdir()
-    shutil.copy(path, d / "obs1.fits")
-    spark.dataSource.register(FitsArchiveDataSource)
-    out = str(tmp_path / "simple_out")
-    ckpt = str(tmp_path / "simple_ckpt")
-    q = (
-        spark.readStream.format("fits_archive")
-        .option("simple_stream", "true")
-        .load(str(d / "*.fits"))
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out)
-    assert got.count() == 2 * 2 * 3 * 4
-    assert {r.obs_id for r in got.select("obs_id").distinct().collect()} == {"obs1"}
-
-
 def test_ledger_manifest_is_sole_commit_point(spark, tmp_path):
     """ADVICE r7: manifest-first commit. A crash between the manifest
     append and the file renames leaves manifested-but-staged files;
@@ -1005,6 +976,7 @@ def test_fits_stream_reader_restart_offsets_exactly_once(tmp_path, archive_file)
                                      ("a.fits", "b.fits", "c.fits", "d.fits", "e.fits"))
 
 
+@pytest.mark.slow
 def test_fits_stream_rate_limit_restart_no_duplicates(spark, tmp_path, archive_file):
     """ADVICE r8 (medium), end to end: stop/restart a rate-limited query
     against a backlog — every file exactly once across the restart."""

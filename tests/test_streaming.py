@@ -27,6 +27,7 @@ def event_dir(spark, sf_dir, tmp_path):
     return src
 
 
+@pytest.mark.slow
 def test_windowed_counts_match_batch(spark, sf_dir, event_dir, tmp_path):
     stream = read_event_stream(spark, event_dir)
     out_dir = str(tmp_path / "out")
@@ -56,6 +57,7 @@ def test_windowed_counts_match_batch(spark, sf_dir, event_dir, tmp_path):
         assert expect[k] == v, k
 
 
+@pytest.mark.slow
 def test_incremental_pipeline_exactly_once(spark, event_dir, tmp_path):
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt2")
@@ -85,6 +87,7 @@ def test_job_state_rollup(spark):
     assert got == {"Complete": 2, "Running": 1, "Failure": 1}
 
 
+@pytest.mark.slow
 def test_upsert_by_key_idempotent(spark, tmp_path):
     from meerpipe_spark.sinks import upsert_by_key
 
@@ -139,6 +142,7 @@ def test_salted_agg_sum_matches_plain(spark, sf_dir):
     assert hot.count() >= 1  # event types each hold >5% of a 5-type table
 
 
+@pytest.mark.slow
 def test_sessionize_stream_matches_batch(spark, sf_dir, tmp_path):
     """Single micro-batch: each user's emitted rows (closed + open
     sessions) must equal the batch gap-sessionization exactly."""
@@ -200,6 +204,7 @@ def test_sessionize_stream_matches_batch(spark, sf_dir, tmp_path):
     assert (g.loc[~is_last, "closed"]).all()
 
 
+@pytest.mark.slow
 def test_stream_stream_join_matches_batch(spark, sf_dir, event_dir, tmp_path):
     """§2.11 stream-stream interval join: click→purchase attribution
     within 1 hour, equivalence with the batch twin join."""
@@ -246,6 +251,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, event_dir, tmp_path):
     assert got == expect
 
 
+@pytest.mark.slow
 def test_dedup_stream_suppresses_redelivery(spark, sf_dir, event_dir, tmp_path):
     """Events delivered twice; dedup on event_id leaves exactly one copy
     of each — matching the clean batch table row-for-row."""
@@ -646,6 +652,7 @@ def test_running_stats_processor_chan_merge_unit():
         assert abs(out["var_samp"].iloc[0] - full.var(ddof=1)) < 1e-10
 
 
+@pytest.mark.slow
 def test_bucketed_stream_join_equals_plain(spark, sf_dir, event_dir, tmp_path):
     """join_event_streams_bucketed (composite (user, time-bucket) key —
     the r11 knee-analysis hot-key mitigation) must emit EXACTLY the

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from meerpipe_spark.io import morton_key, write_zordered
@@ -33,6 +34,7 @@ def _file_spans(spark, path, col):
     return spans
 
 
+@pytest.mark.slow
 def test_zorder_narrows_both_dimensions(spark, tmp_path):
     import random
 
